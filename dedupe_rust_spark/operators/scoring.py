@@ -184,18 +184,6 @@ def score_estimated(est_pairs: DataFrame, sig: DataFrame,
     return fast.unionByName(scored)
 
 
-def score_candidates(pairs: DataFrame, sig: DataFrame,
-                     lev_match: float = LEV_MATCH,
-                     jaccard_match: float = JACCARD_MATCH,
-                     compute_jw: bool = False,
-                     prefilter: bool = True) -> DataFrame:
-    """attach_estimates + score_estimated in one call (the estimate table
-    is lazily materialized since both branches of the split consume it)."""
-    est = attach_estimates(pairs, sig, prefilter).localCheckpoint(eager=False)
-    return score_estimated(est, sig, lev_match, jaccard_match, compute_jw,
-                           prefilter)
-
-
 def match_edges(scores: DataFrame) -> DataFrame:
     return scores.filter(F.col("is_match")).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")

@@ -1,23 +1,35 @@
-"""End-to-end dedup pipeline: staged DataFrames with checkpointed outputs,
-per-partition lineage metrics, and resume-by-run_id.
+"""End-to-end dedup pipeline: one ordered stage list, materialized under
+one per-run policy, with per-partition lineage metrics and resume-by-run_id.
 
 Stage graph (SURVEY.md §3.3):
-  read pages -> extract+signatures [ckpt] -> exact edges
-             -> lsh blocks -> candidate pairs [ckpt] -> scores [ckpt]
-             -> edges (fuzzy ∪ exact) -> connected components -> clusters [ckpt]
+  read pages -> extract+signatures [signatures]
+             -> exact collapse -> lsh blocks -> candidate pairs
+                + MinHash estimates [candidates]
+             -> scores [scores]
+             -> connected components over fuzzy edges between exact-group
+                representatives -> members inherit the root's label [clusters]
              -> metrics [append]
 
-Each checkpoint is a parquet dir `out/<stage>/run_id=<R>/` (Iceberg-style
-partition layout; no Iceberg runtime jar in this sandbox — swap the writer
-format on a cluster that has one). A stage whose output dir has _SUCCESS is
-SKIPPED on rerun with the same run_id: that is the resumability contract
-(north rule), tested in tests/test_resume.py.
+Every bracketed stage goes through `DedupPipeline._checkpoint`, and the run
+picks its materialization policy once, from `checkpoints` and `out_dir`:
+  * parquet checkpoint (out_dir set): each stage is a parquet dir
+    `out/<stage>/run_id=<R>/cfg=<fingerprint>/` (Iceberg-style partition
+    layout written as plain parquet — swap the writer format on a cluster
+    with an Iceberg runtime). A stage whose dir has _SUCCESS is not
+    rebuilt on rerun with the same run_id and config: that is the
+    resumability contract (north rule), tested by the test_resume_* tests
+    in tests/test_pipeline_spark.py;
+  * counted localCheckpoint (no out_dir);
+  * fuse (checkpoints=False, the throughput fast path): see _FAST_POLICY.
+`dedup_clusters` runs the same stages on an in-memory DataFrame.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -52,10 +64,10 @@ class PipelineConfig:
     # every slow-path pair was pure dead CPU in the hottest UDF. Opt in for
     # analysis runs that want the column populated.
     compute_jw: bool = False
-    # checkpoints=False is the throughput fast path: stages fuse into a
-    # handful of jobs (no per-stage materialization/count, no per-partition
-    # lineage, no cap census). Same results; resumability and fine-grained
-    # metrics are OFF — use for benches, not production runs.
+    # checkpoints=False is the throughput fast path (_FAST_POLICY): no
+    # parquet checkpoints, scores fuse into the clustering job, no
+    # per-partition lineage, no cap census. Same results; resumability and
+    # fine-grained metrics are OFF — use for benches, not production runs.
     checkpoints: bool = True
     # corpus-row threshold for the scoring attach semi pre-filter
     # (scoring.attach_estimates/score_estimated prefilter flag): below it
@@ -102,49 +114,47 @@ def _audit_ids(sig: DataFrame) -> int:
     return n
 
 
+def spread(df: DataFrame) -> DataFrame:
+    """Spread an under-parallel source across the cluster before an
+    expensive per-row stage. A small parquet file, or a catalog-derived
+    table, is 1-3 input splits, so the extraction/signature UDFs would run
+    on 1-3 tasks. Conditional on the actual split count: a real corpus
+    scan already yields tens of thousands of splits and must NOT pay a
+    full-corpus shuffle (html included). The split count is parquet footer
+    metadata, so no job runs. Row values are per-row deterministic, so
+    partitioning never changes any output."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < 2 * par:
+        return df.repartition(2 * par)
+    return df
+
+
+# How a stage's output is materialized: a resumable parquet checkpoint, a
+# localCheckpoint (counted or not), or fused into its consumer's job.
+PARQUET, LOCAL, LOCAL_UNCOUNTED, FUSE = (
+    "parquet", "local", "local_uncounted", "fuse")
+STAGES = ("signatures", "candidates", "scores", "clusters")
+# checkpoints=False: signatures and candidates feed several subtrees and
+# their counts feed the metrics and the pre-filter decision; scores has
+# exactly one consumer (the edge list); clusters is small with two
+# consumers (metrics count + caller), so one cheap materialization.
+_FAST_POLICY = {"signatures": LOCAL, "candidates": LOCAL, "scores": FUSE,
+                "clusters": LOCAL_UNCOUNTED}
+
+
 def dedup_clusters(pages: DataFrame, cfg: PipelineConfig | None = None
                    ) -> DataFrame:
-    """The full fuzzy dedup dataflow on an in-memory DataFrame — same stage
-    composition as DedupPipeline.run() but checkpoint-free, for catalog /
+    """The batch dataflow on an in-memory DataFrame, for catalog /
     invariant queries that derive `pages` from the driver's tables instead
-    of a parquet dir. Returns labels (url, cluster_id), clustered rows only.
-    """
-    cfg = cfg or PipelineConfig(checkpoints=False)
-    # same under-parallel guard as DedupPipeline.signatures: catalog-derived
-    # pages are 1-3 splits, so the signature UDF would run on 1-3 tasks; a
-    # real corpus scan is already parallel and skips the shuffle (the split
-    # count is parquet footer metadata, no job runs)
-    par = pages.sparkSession.sparkContext.defaultParallelism
-    if pages.rdd.getNumPartitions() < 2 * par:
-        pages = pages.repartition(2 * par)
-    sig = sigs.signatures(sigs.extract(pages, cfg.use_golden_text),
-                          cfg.lsh_bands)
-    sig = sig.localCheckpoint()  # consumed by 4 downstream subtrees
-    _audit_ids(sig)  # unconditional fail-fast (signatures.py contract)
-    # the min(id) roots agg (one HashAggregate over the corpus) feeds both
-    # the group map and the representatives — materialize it once
-    roots = blocking.exact_roots(sig).localCheckpoint(eager=False)
-    ex_map = blocking.exact_group_map(sig, roots)
-    reps = blocking.exact_representatives(sig, roots)
-    if cfg.hot_block_bound is not None:
-        # hot-key detection scans the band stream twice (sample + group):
-        # materialize the reps join once so the second pass is explode-only
-        reps = reps.localCheckpoint(eager=False)
-    pruned, _ = blocking.prune_blocks(blocking.all_blocks(reps),
-                                      cfg.max_block, cfg.hot_block_bound)
-    pairs = cand.candidate_pairs(pruned, keep_block_key=False,
-                                 star_min_block=cfg.star_min_block)
-    if cfg.simhash_prefilter:
-        pairs = cand.simhash_prefilter(pairs, sig, cfg.max_hamming)
-    scores = scoring.score_candidates(pairs, sig, cfg.lev_match,
-                                      cfg.jaccard_match, cfg.compute_jw)
-    rep_labels = cluster.connected_components(scoring.match_edges(scores))
-    return cluster.propagate_to_members(rep_labels, ex_map,
-                                        sig.select("id", "url"))
+    of a parquet dir: DedupPipeline.run with `pages` as its source and no
+    out_dir. Returns labels (url, cluster_id), clustered rows only."""
+    return DedupPipeline(pages.sparkSession, None,
+                         config=cfg or PipelineConfig(checkpoints=False)
+                         ).run(pages)
 
 
 class DedupPipeline:
-    def __init__(self, spark: SparkSession, pages_dir: str,
+    def __init__(self, spark: SparkSession, pages_dir: str | None,
                  out_dir: str | None = None, run_id: str | None = None,
                  config: PipelineConfig | None = None):
         self.spark = spark
@@ -182,42 +192,31 @@ class DedupPipeline:
         return hashlib.blake2b(payload.encode(), digest_size=4).hexdigest()
 
     # ------------------------------------------------------------ checkpoints
-    def _ckpt_path(self, stage: str) -> str | None:
-        if self.out_dir is None:
-            return None
+    def _ckpt_path(self, stage: str) -> str:
         return os.path.join(self.out_dir, stage, f"run_id={self.run_id}",
                             f"cfg={self.cfg_fingerprint}")
 
-    def _checkpoint(self, df: DataFrame, stage: str) -> DataFrame:
-        """Write stage output and read it back (cuts lineage + resumable).
-        Without out_dir, fall back to localCheckpoint (tests/bench)."""
+    def _checkpoint(self, stage: str, build: Callable[[], DataFrame]
+                    ) -> DataFrame:
+        """Materialize one stage under the run's policy. `build` returns
+        the stage's lazy DataFrame; it is never called when the stage's
+        parquet checkpoint already exists (resume)."""
         self.spark.sparkContext.setJobDescription(f"stage:{stage}")
-        if not self.cfg.checkpoints and stage == "scores":
-            # fast path: scores has exactly one downstream consumer (the
-            # edge list) — let it fuse into that job
-            return df
-        if not self.cfg.checkpoints and stage == "clusters":
-            # small result, >=2 consumers (metrics count + caller): one
-            # cheap materialization, no parquet round-trip. Timed — this
-            # is where the lazy propagate/relabel dataflow actually runs.
-            t0 = time.monotonic()
-            out = df.localCheckpoint()
-            self.stage_metrics.append(
-                {"stage": "clusters", "rows_out": -1, "run_id": self.run_id,
-                 "wall_ms": int((time.monotonic() - t0) * 1000)})
-            return out
-        path = self._ckpt_path(stage)
+        how = self.policy[stage]
+        if how == FUSE:
+            return build()
+        path = self._ckpt_path(stage) if how == PARQUET else None
+        resumed = path is not None and os.path.exists(
+            os.path.join(path, "_SUCCESS"))
+        df = None if resumed else build()
         t0 = time.monotonic()
         if path is None:
             out = df.localCheckpoint()
-            n = out.count()
-            resumed = False
         else:
-            resumed = os.path.exists(os.path.join(path, "_SUCCESS"))
             if not resumed:
                 df.write.mode("overwrite").parquet(path)
             out = self.spark.read.parquet(path)
-            n = out.count()
+        n = -1 if how == LOCAL_UNCOUNTED else out.count()
         self.stage_metrics.append(
             {"stage": stage, "rows_out": n,
              "wall_ms": int((time.monotonic() - t0) * 1000),
@@ -225,139 +224,119 @@ class DedupPipeline:
         )
         return out
 
-    def _stage_done(self, stage: str) -> bool:
-        path = self._ckpt_path(stage)
-        return bool(path) and os.path.exists(os.path.join(path, "_SUCCESS"))
-
-    def _read_stage(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._ckpt_path(stage))
-
     # ---------------------------------------------------------------- stages
-    def signatures(self) -> DataFrame:
-        if self._stage_done("signatures"):
-            df = self._read_stage("signatures")
-            self.stage_metrics.append({"stage": "signatures", "resumed": True,
-                                       "rows_out": df.count(), "wall_ms": 0,
-                                       "run_id": self.run_id})
-            return df
-        pages = clean_pages(read_pages(self.spark, self.pages_dir),
-                            self.cfg.exclude_hosts)
-        # The synthetic pages table is one small parquet file -> one input
-        # split -> the extraction UDF would run on a single task. Spread it
-        # across the cluster — but ONLY when the scan is actually
-        # under-parallel: an unconditional repartition here would shuffle
-        # the ENTIRE page corpus (html included) on a real 100 TB table
-        # whose scan already yields tens of thousands of splits. The scan
-        # split count is known before any job runs (parquet footer
-        # metadata), so this check is free.
-        par = self.spark.sparkContext.defaultParallelism
-        if pages.rdd.getNumPartitions() < 2 * par:
-            pages = pages.repartition(2 * par)
-        extracted = sigs.extract(pages, self.cfg.use_golden_text)
-        sig = sigs.signatures(extracted, self.cfg.lsh_bands)
-        return self._checkpoint(sig, "signatures")
-
-    def run(self) -> DataFrame:
-        """Full pipeline; returns clusters(url, cluster_id), clustered rows only."""
+    def run(self, pages: DataFrame | None = None) -> DataFrame:
+        """Full pipeline; returns clusters(url, cluster_id), clustered rows
+        only. `pages` (already cleaned) replaces the read of pages_dir."""
         t_all = time.monotonic()
-        sig = self.signatures()
-
-        if self.cfg.checkpoints:
+        cfg = self.cfg
+        self.policy = _FAST_POLICY if not cfg.checkpoints else dict.fromkeys(
+            STAGES, LOCAL if self.out_dir is None else PARQUET)
+        sig = self._checkpoint("signatures",
+                               lambda: self._signatures(pages))
+        if cfg.checkpoints:
             # per-partition lineage for the extract stage (north rule): rows
             # per partition + drop accounting, written into metrics
             self._partition_lineage(sig, "signatures")
-        # surrogate-id collision audit — UNCONDITIONAL (fast path included):
-        # a collision would silently merge clusters, so every run is
-        # gated on it, matching the signatures.py docstring claim. One
-        # agg over the already-materialized sig (~0.1 s at 400k). Round 6:
-        # the audit job is submitted from a driver THREAD (guide §2.6 —
-        # concurrent jobs back-fill executors) so its wall overlaps the
-        # blocking/candidates stages instead of adding a serial barrier;
-        # the future is resolved (raising on any collision) BEFORE
-        # clusters are returned, so no corrupt result can ever be
-        # observed — "fail fast" becomes "fail before any output".
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _audit() -> tuple[int, int]:
-            t0 = time.monotonic()
-            self.spark.sparkContext.setJobDescription("stage:id_audit")
-            n = _audit_ids(sig)
-            self.spark.sparkContext.setJobDescription(None)
-            return n, int((time.monotonic() - t0) * 1000)
-
-        audit_pool = ThreadPoolExecutor(max_workers=1)
-        audit_future = audit_pool.submit(_audit)
-
+        # the min(id) roots agg (one HashAggregate over the corpus) feeds
+        # both the representatives and the exact group map: materialize once
         roots = blocking.exact_roots(sig).localCheckpoint(eager=False)
-        ex_map = blocking.exact_group_map(sig, roots)
-        reps = blocking.exact_representatives(sig, roots)
-        if self.cfg.hot_block_bound is not None:
-            reps = reps.localCheckpoint(eager=False)
-        blocks = blocking.all_blocks(reps)
-        pruned, cap_metrics = blocking.prune_blocks(
-            blocks, self.cfg.max_block, self.cfg.hot_block_bound)
-        if self.cfg.checkpoints:
-            t0 = time.monotonic()
-            n_salted = cap_metrics.count()
-            self.stage_metrics.append(
-                {"stage": "blocks_salted", "rows_out": n_salted,
-                 "run_id": self.run_id,
-                 "wall_ms": int((time.monotonic() - t0) * 1000)})
-
-        pairs = cand.candidate_pairs(pruned, keep_block_key=False,
-                                     star_min_block=self.cfg.star_min_block)
-        if self.cfg.simhash_prefilter:
-            pairs = cand.simhash_prefilter(pairs, sig, self.cfg.max_hamming)
         # semi pre-filter of the attach joins only when the corpus is big
         # enough that the un-filtered attach would shuffle it (see
         # PipelineConfig.attach_prefilter_rows); the row count is already
-        # measured by the signatures checkpoint — no extra job
-        n_sig = next((m["rows_out"] for m in self.stage_metrics
-                      if m["stage"] == "signatures"), 0)
-        prefilter = n_sig >= self.cfg.attach_prefilter_rows
-        # the candidates checkpoint carries the MinHash-Jaccard estimate:
-        # one materialization serves both the resume contract and the
-        # fast/slow scoring split (both branches read it)
-        est = self._checkpoint(
-            scoring.attach_estimates(pairs, sig, prefilter), "candidates")
-
-        scores = scoring.score_estimated(est, sig, self.cfg.lev_match,
-                                         self.cfg.jaccard_match,
-                                         self.cfg.compute_jw,
-                                         prefilter=prefilter)
-        scores = self._checkpoint(scores, "scores")
-
-        # Transitive closure runs over FUZZY edges between exact-group
-        # representatives only; exact copies then inherit their root's
-        # label via one join (blocking.exact_group_map). The exact tier can
-        # never be lost (F1 floor, SURVEY.md §7e): a group's members always
-        # share their root's final label.
-        t0 = time.monotonic()
-        cc_stats: dict = {}
-        rep_labels = cluster.connected_components(scoring.match_edges(scores),
-                                                  stats=cc_stats)
-        labels = cluster.propagate_to_members(rep_labels, ex_map,
-                                              sig.select("id", "url"))
-        self.stage_metrics.append(
-            {"stage": "cc_loop", "rows_out": cc_stats.get("levels", -1),
-             "run_id": self.run_id,
-             "wall_ms": int((time.monotonic() - t0) * 1000)})
-        # gate on the concurrent id audit BEFORE materializing output:
-        # raises on any surrogate collision, so no corrupt clusters can
-        # be observed; wall_ms is the audit's own span (overlapped)
-        n_bad_ids, audit_ms = audit_future.result()
-        audit_pool.shutdown(wait=False)
+        # measured by the signatures stage — no extra job
+        n_sig = next(m["rows_out"] for m in self.stage_metrics
+                     if m["stage"] == "signatures")
+        prefilter = n_sig >= cfg.attach_prefilter_rows
+        # surrogate-id collision audit — UNCONDITIONAL (fast path and resume
+        # included): a collision would silently merge clusters. The audit
+        # job runs from a driver thread (guide §2.6 — concurrent jobs
+        # back-fill executors) so its wall overlaps blocking/candidates;
+        # it is resolved (raising on any collision) right after the
+        # candidates stage, so neither scores nor clusters are ever
+        # materialized from colliding ids.
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            audit = pool.submit(self._audit, sig)
+            # the candidates stage carries the MinHash-Jaccard estimate:
+            # one materialization serves both the resume contract and the
+            # fast/slow scoring split (both branches read it)
+            est = self._checkpoint(
+                "candidates", lambda: scoring.attach_estimates(
+                    self._pairs(sig, roots), sig, prefilter))
+            n_bad_ids, audit_ms = audit.result()
         self.stage_metrics.append(
             {"stage": "id_audit", "rows_out": n_bad_ids,
              "run_id": self.run_id, "wall_ms": audit_ms})
-        clusters = self._checkpoint(labels, "clusters")
-
+        scores = self._checkpoint(
+            "scores", lambda: scoring.score_estimated(
+                est, sig, cfg.lev_match, cfg.jaccard_match, cfg.compute_jw,
+                prefilter=prefilter))
+        clusters = self._checkpoint(
+            "clusters", lambda: self._labels(scores, sig, roots))
         self.stage_metrics.append(
             {"stage": "pipeline", "rows_out": clusters.count(),
              "wall_ms": int((time.monotonic() - t_all) * 1000),
              "run_id": self.run_id})
         self._write_metrics()
         return clusters
+
+    def _signatures(self, pages: DataFrame | None) -> DataFrame:
+        if pages is None:
+            pages = clean_pages(read_pages(self.spark, self.pages_dir),
+                                self.cfg.exclude_hosts)
+        extracted = sigs.extract(spread(pages), self.cfg.use_golden_text)
+        return sigs.signatures(extracted, self.cfg.lsh_bands)
+
+    def _audit(self, sig: DataFrame) -> tuple[int, int]:
+        t0 = time.monotonic()
+        self.spark.sparkContext.setJobDescription("stage:id_audit")
+        n = _audit_ids(sig)
+        self.spark.sparkContext.setJobDescription(None)
+        return n, int((time.monotonic() - t0) * 1000)
+
+    def _pairs(self, sig: DataFrame, roots: DataFrame) -> DataFrame:
+        """Exact collapse -> LSH blocks -> pruned candidate pairs."""
+        cfg = self.cfg
+        reps = blocking.exact_representatives(sig, roots)
+        if cfg.hot_block_bound is not None:
+            # hot-key detection scans the band stream twice (sample +
+            # group): materialize the reps join once so the second pass is
+            # explode-only
+            reps = reps.localCheckpoint(eager=False)
+        pruned, cap_metrics = blocking.prune_blocks(
+            blocking.all_blocks(reps), cfg.max_block, cfg.hot_block_bound)
+        if cfg.checkpoints:
+            t0 = time.monotonic()
+            n_salted = cap_metrics.count()
+            self.stage_metrics.append(
+                {"stage": "blocks_salted", "rows_out": n_salted,
+                 "run_id": self.run_id,
+                 "wall_ms": int((time.monotonic() - t0) * 1000)})
+        pairs = cand.candidate_pairs(pruned, keep_block_key=False,
+                                     star_min_block=cfg.star_min_block)
+        if cfg.simhash_prefilter:
+            pairs = cand.simhash_prefilter(pairs, sig, cfg.max_hamming)
+        return pairs
+
+    def _labels(self, scores: DataFrame, sig: DataFrame, roots: DataFrame
+                ) -> DataFrame:
+        """Transitive closure runs over FUZZY edges between exact-group
+        representatives only; exact copies then inherit their root's label
+        via one join (blocking.exact_group_map). The exact tier can never
+        be lost (F1 floor, SURVEY.md §7e): a group's members always share
+        their root's final label."""
+        t0 = time.monotonic()
+        cc_stats: dict = {}
+        rep_labels = cluster.connected_components(scoring.match_edges(scores),
+                                                  stats=cc_stats)
+        labels = cluster.propagate_to_members(
+            rep_labels, blocking.exact_group_map(sig, roots),
+            sig.select("id", "url"))
+        self.stage_metrics.append(
+            {"stage": "cc_loop", "rows_out": cc_stats.get("levels", -1),
+             "run_id": self.run_id,
+             "wall_ms": int((time.monotonic() - t0) * 1000)})
+        return labels
 
     def write_report(self, clusters: DataFrame,
                      max_inline_groups: int = 1000) -> dict:

@@ -354,7 +354,9 @@ def _fuzzy_matches(sig: DataFrame, prev: DataFrame,
         .unionByName(prev.select(F.concat(F.lit("o:"), "url").alias("id"),
                                  "minhash", "text"))
     )
-    scores = scoring.score_candidates(cand, sig_u, lev_match, jaccard_match)
+    # the estimate table is read by both branches of the fast/slow split
+    est = scoring.attach_estimates(cand, sig_u).localCheckpoint(eager=False)
+    scores = scoring.score_estimated(est, sig_u, lev_match, jaccard_match)
     matched = scores.filter(F.col("is_match")).select(
         F.expr("substring(id_a, 3)").alias("url"),
         F.expr("substring(id_b, 3)").alias("matched_url"),

@@ -161,7 +161,8 @@ def test_score_split_nondefault_threshold_refines_at_boundary(spark):
     pairs = spark.createDataFrame(
         [(min(ids.values()), max(ids.values()))], "id_a long, id_b long")
     jm = 0.25
-    got = scoring.score_candidates(pairs, s, jaccard_match=jm).collect()[0]
+    est = scoring.attach_estimates(pairs, s).localCheckpoint(eager=False)
+    got = scoring.score_estimated(est, s, jaccard_match=jm).collect()[0]
     lo, hi = refine_bounds(jm)
     exact = scorecore.jaccard_shingles(ta, tb)
     if got.is_match and got.lev_sim is None:
@@ -189,7 +190,8 @@ def test_score_null_estimate_pairs_not_dropped(spark):
     s = spark.createDataFrame(
         sig_rows, "id long, url string, text string, minhash array<smallint>")
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    out = scoring.score_candidates(pairs, s).collect()
+    est = scoring.attach_estimates(pairs, s).localCheckpoint(eager=False)
+    out = scoring.score_estimated(est, s).collect()
     assert len(out) == 1
     r = out[0]
     assert r.is_match  # identical texts: lev_sim = 1.0 decides
@@ -205,7 +207,8 @@ def test_score_split_decisions_match_exact(spark, sig):
     pruned, _ = blocking.prune_blocks(
         blocking.all_blocks(blocking.exact_representatives(sig)))
     pairs = cand.candidate_pairs(pruned, keep_block_key=False)
-    got = scoring.score_candidates(pairs, sig).toPandas()
+    est = scoring.attach_estimates(pairs, sig).localCheckpoint(eager=False)
+    got = scoring.score_estimated(est, sig).toPandas()
     texts = {r.id: r.text for r in sig.select("id", "text").collect()}
     flipped = 0
     for r in got.itertuples():
@@ -455,6 +458,65 @@ def test_fast_path_equals_checkpointed(spark, tiny_pages_dir):
                          config=PipelineConfig(checkpoints=False)).run()
     assert slow.exceptAll(fast).count() == 0
     assert fast.exceptAll(slow).count() == 0
+
+
+def test_attach_prefilter_branches_equal(spark, tiny_pages_dir):
+    """The attach semi pre-filter is a pure filter: forcing it on (row
+    threshold 0) must give the same clusters as the size-based default,
+    which leaves it off on tiny pages."""
+    from dedupe_rust_spark.plans.pipeline import PipelineConfig
+
+    default = DedupPipeline(spark, tiny_pages_dir, config=PipelineConfig(
+        checkpoints=False)).run()
+    forced = DedupPipeline(spark, tiny_pages_dir, config=PipelineConfig(
+        checkpoints=False, attach_prefilter_rows=0)).run()
+    assert default.exceptAll(forced).count() == 0
+    assert forced.exceptAll(default).count() == 0
+
+
+def test_dedup_clusters_is_the_pipeline_dataflow(spark, tiny_pages_dir):
+    """dedup_clusters (the catalog/invariant entry point) runs the same
+    stages as DedupPipeline.run: same pages in, same clusters out."""
+    from dedupe_rust_spark.plans.pipeline import PipelineConfig, dedup_clusters
+
+    cfg = PipelineConfig(checkpoints=False)
+    mem = dedup_clusters(clean_pages(read_pages(spark, tiny_pages_dir)), cfg)
+    run = DedupPipeline(spark, tiny_pages_dir, config=cfg).run()
+    assert mem.exceptAll(run).count() == 0
+    assert run.exceptAll(mem).count() == 0
+
+
+def test_id_collision_never_yields_output(spark, tiny_pages_dir, sig,
+                                          tmp_path, monkeypatch):
+    """Two distinct urls sharing one surrogate id must fail the run before
+    any clusters are written, and a rerun that resumes the poisoned
+    signatures checkpoint must fail the same way."""
+    import glob
+    import os
+
+    from dedupe_rust_spark.operators import signatures as sig_mod
+
+    (url_a, id_a), (url_b, _) = (
+        sig.select("url", "id").orderBy("url").limit(2).collect())
+    real = sig_mod.signatures
+
+    def colliding(extracted, lsh_bands=None):
+        s = real(extracted, lsh_bands)
+        return s.withColumn("id", F.when(F.col("url") == url_b, F.lit(id_a))
+                            .otherwise(F.col("id")))
+
+    monkeypatch.setattr(sig_mod, "signatures", colliding)
+    out = str(tmp_path / "out")
+    runs = [DedupPipeline(spark, tiny_pages_dir, out_dir=out, run_id="P")
+            for _ in range(2)]
+    for p in runs:
+        with pytest.raises(RuntimeError, match="collision"):
+            p.run()
+    assert [m["resumed"] for m in runs[1].stage_metrics
+            if m["stage"] == "signatures"] == [True]
+    for stage in ("scores", "clusters"):
+        assert not glob.glob(os.path.join(out, stage, "**", "_SUCCESS"),
+                             recursive=True), stage
 
 
 def test_write_report_golden_shape(spark, tiny_pages_dir, tmp_path):

@@ -108,7 +108,9 @@ def main() -> None:
         "Pair scoring (ArrowEvalPython island)",
         "Exactly ONE ArrowEvalPython node; everything around it stays in "
         "WholeStageCodegen. Texts attached via two hash joins.",
-        fmt(scoring.score_candidates(pairs, sig)),
+        fmt(scoring.score_estimated(
+            scoring.attach_estimates(pairs, sig).localCheckpoint(eager=False),
+            sig)),
     ))
 
     # 5. ANN brute force
