@@ -9,17 +9,24 @@ Two tiers (training-data-pipeline ops, beyond the reference's surface):
                        cross join is impossible; bucketing makes the join
                        equi on (table, bucket) and AQE handles skew.
 
-Embeddings are array<float>; pair/probe scoring arithmetic is cast to
-double and stays in codegen (F.aggregate/F.zip_with). The one Python
-surface is SRP bucketing (_srp_buckets_udf): a dense matmul against a
-constant plane matrix, done as one Arrow-batch numpy matmul — the
-expression-tree form was a measured plan-size pathology (see the UDF's
-docstring).
+Plus lsh_cosine_pairs, the all-pairs near-duplicate join over SRP buckets
+(lsh_emb_dups / emb_dup_clusters).
+
+Embeddings are array<float>; probe scoring arithmetic (the top-k tiers)
+is cast to double and stays in codegen (F.aggregate/F.zip_with). Python
+runs where numpy does the work in whole batches:
+  * SRP bucketing and IVF cell assignment (_srp_buckets_udf,
+    _ivf_cells_udf): a dense matmul against a constant matrix per Arrow
+    batch — the expression-tree forms were a measured plan-size
+    pathology (see _srp_buckets_udf's docstring);
+  * lsh_cosine_pairs' in-bucket scoring (_bucket_pairs): one grouped-map
+    call per bucket builds a tiled Gram in the SQL oracle's left-fold
+    order, so the cosines are bit-identical to the brute-force twin.
 """
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — resolves the Arrow UDF type hints
+import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 SRP_BITS = 16  # 2^16 buckets; tune to corpus size / recall target
@@ -128,11 +135,16 @@ def srp_bucket(df: DataFrame, vec_col: str = "embedding",
 def srp_band_blocks(df: DataFrame, id_col: str = "vec_id",
                     vec_col: str = "embedding", bits: int = 4,
                     n_tables: int = 8, dim: int = 64, seed: int = 42,
-                    seed_per_table: bool = False) -> DataFrame:
-    """All SRP tables in ONE pass: -> (id, block_key) rows via a single
+                    seed_per_table: bool = False,
+                    with_vec: bool = False) -> DataFrame:
+    """All SRP tables in ONE pass: -> (block_key, id) rows via a single
     posexplode, the same banding shape as MinHash-LSH (blocking.lsh_blocks).
     One scan, one explode, no per-table union — at 10^9 rows this is one
     shuffle-join key stream instead of n_tables separate plans.
+
+    with_vec=True carries the vector column along: (block_key, id, vec),
+    the stream lsh_cosine_pairs scores bucket by bucket. Rows whose vector
+    is null get no bucket and so no band row.
 
     seed_per_table=True draws table t's hyperplanes from RandomState(seed+t)
     (first `bits` rows) — the exact plane family of the per-table
@@ -156,60 +168,72 @@ def srp_band_blocks(df: DataFrame, id_col: str = "vec_id",
     # comparisons in the banded self-join. Consumers join on the key only
     # (pair-set oracles pin pairs, not keys), so the encoding is free to be
     # opaque.
+    carry = [id_col, vec_col] if with_vec else [id_col]
     return df.select(
-        F.col(id_col), F.posexplode(udf(F.col(vec_col))).alias("table", "bucket")
+        *carry, F.posexplode(udf(F.col(vec_col))).alias("table", "bucket")
     ).select(
         F.xxhash64(F.col("table"), F.col("bucket")).alias("block_key"),
-        id_col,
+        *carry,
     )
 
 
-def _pair_cosine_udf():
-    """Arrow pandas UDF: (va, vb) -> cosine double, numerically IDENTICAL
-    to the builtin higher-order form round(_dot(va,vb)/(_norm(va)*_norm(vb)))
-    before the round: the numpy loop below performs the same IEEE-754
-    double operations in the same order as the F.aggregate left folds
-    (cast each float element to double, multiply, accumulate element 0..d-1,
-    sqrt the norm folds, multiply the two norms, divide) — so the value is
-    bit-identical and the brute-force DuckDB equality oracle is untouched.
+# Gram rows scored at once: a bucket of m vectors holds O(GRAM_TILE * m)
+# doubles, not O(m^2)
+GRAM_TILE = 256
 
-    Why a UDF: higher-order-function folds evaluate per element per row
-    outside whole-stage codegen; at millions of candidate pairs the
-    interpreted fold dominated the banded-pairs query (measured 45-60 s
-    executor CPU for ~2M pairs at sf0.1, with multi-x lap-to-lap JIT
-    variance). One vectorized numpy pass per Arrow batch does the same
-    arithmetic in milliseconds (guide §4.2). Rounding stays JVM-side
-    (Spark round is BigDecimal HALF_UP — not numpy's rounding)."""
+
+def _bucket_pairs(cut: float, id_col: str, vec_col: str):
+    """Grouped-map body: one SRP bucket (block_key, id, vec rows) ->
+    (vec_id_a, vec_id_b, raw) for every in-bucket pair id_a < id_b whose
+    unrounded cosine is >= cut.
+
+    The arithmetic is the brute-force SQL cosine's, IEEE op for IEEE op:
+    float elements widened to double, dot products and squared norms
+    accumulated as a left fold over dims 0..dim-1 (G += a_d (x) a_d, one
+    multiply then one add per element — no BLAS reordering or FMA), then
+    dot / (sqrt(|a|^2) * sqrt(|b|^2)). A pair's value is therefore the
+    same bits in every bucket it shares, and rounding stays JVM-side
+    (Spark round is HALF_UP on the decimal form — not numpy's rounding).
+
+    The Gram is built GRAM_TILE rows at a time against the columns at and
+    after the tile, so only the upper triangle is computed and a hot
+    bucket's working set stays O(GRAM_TILE * m). Zero vectors give 0/0 =
+    NaN, which fails the >= cut test here, before any NaN can reach Spark
+    (where NaN sorts above every number)."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import types as T
 
-    def _fold_cosine(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
-        dot = np.zeros(len(A))
-        na = np.zeros(len(A))
-        nb = np.zeros(len(A))
-        for d in range(A.shape[1]):  # left fold, same order as F.aggregate
-            dot += A[:, d] * B[:, d]
-            na += A[:, d] * A[:, d]
-            nb += B[:, d] * B[:, d]
-        return dot / (np.sqrt(na) * np.sqrt(nb))
+    def score(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(id_col)
+        ids = pdf[id_col].to_numpy()
+        m = len(ids)
+        out_a, out_b, out_c = [ids[:0]], [ids[:0]], [np.empty(0)]
+        if m > 1:
+            # dims x m: each a_d is one contiguous row
+            AT = np.vstack(pdf[vec_col].to_numpy()).T.astype(np.float64,
+                                                            order="C")
+            sq = np.zeros(m)
+            for a in AT:
+                sq += a * a
+            norm = np.sqrt(sq)
+            for t in range(0, m - 1, GRAM_TILE):
+                G = np.zeros((min(GRAM_TILE, m - t), m - t))
+                prod = np.empty_like(G)
+                for a in AT:
+                    G += np.multiply.outer(a[t:t + GRAM_TILE], a[t:],
+                                           out=prod)
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    C = G / np.multiply.outer(norm[t:t + GRAM_TILE],
+                                              norm[t:], out=prod)
+                # strict upper triangle of the tile: local col > local row
+                r, c = np.nonzero(np.triu(C >= cut, 1))
+                out_a.append(ids[t + r])
+                out_b.append(ids[t + c])
+                out_c.append(C[r, c])
+        return pd.DataFrame({"vec_id_a": np.concatenate(out_a),
+                             "vec_id_b": np.concatenate(out_b),
+                             "raw": np.concatenate(out_c)})
 
-    @pandas_udf(T.DoubleType())
-    def cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        nulls = va.isna().to_numpy() | vb.isna().to_numpy()
-        if not nulls.any():  # hot path: one vstack, no per-row pandas calls
-            A = np.vstack(va.to_numpy()).astype(np.float64)
-            B = np.vstack(vb.to_numpy()).astype(np.float64)
-            return pd.Series(_fold_cosine(A, B))
-        out = pd.Series(np.full(len(va), None, dtype=object))
-        valid = np.where(~nulls)[0]
-        if len(valid):
-            A = np.vstack(va.iloc[valid].to_numpy()).astype(np.float64)
-            B = np.vstack(vb.iloc[valid].to_numpy()).astype(np.float64)
-            out.iloc[valid] = _fold_cosine(A, B)
-        return out
-
-    return cos
+    return score
 
 
 def lsh_cosine_pairs(df: DataFrame, threshold: float = 0.35,
@@ -226,15 +250,17 @@ def lsh_cosine_pairs(df: DataFrame, threshold: float = 0.35,
     per-bucket pair fan-out); tables buy back the recall that extra bits
     cost.
 
-    Plan shape (round 6): ONE shuffle of the band stream — buckets are
-    grouped (collect_list, map-side combinable) and each in-block pair is
-    emitted once via nested explodes, the same candidate shape as the text
-    path (blocking.prune_blocks + candidates.candidate_pairs). The former
-    banded self-join shuffled/broadcast the band stream per join side and
-    probed m^2 rows per bucket. Pair dedup is the one pair-sized exchange;
-    vectors are attached by id joins (broadcast here; hash joins of
-    pairs — small relative to the corpus — at scale) and scored by the
-    bit-exact Arrow batch cosine (_pair_cosine_udf)."""
+    Plan shape: ONE shuffle of the band stream (block_key, id, vec), then a
+    grouped-map Arrow UDF scores each bucket in place (_bucket_pairs: a
+    tiled Gram in the SQL oracle's fold order), so each vector crosses to
+    Python once per table and a pair row exists only once it passes a
+    superset cut (raw >= threshold - 1e-4). The JVM applies the exact
+    rule, round(raw, 4) >= threshold, and the one pair-sized `distinct`
+    runs over matched pairs only (a pair recurs in every table it shares).
+    A bucket is one Python call: a single huge bucket (e.g. a degenerate
+    vector repeated) is bounded in memory by the tile, not in time."""
+    from pyspark.sql import types as T
+
     ids = df.select(id_col, vec_col)
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
@@ -242,60 +268,26 @@ def lsh_cosine_pairs(df: DataFrame, threshold: float = 0.35,
     # corpus runs the matmul on ONE task. Spread it — but only when the
     # scan is actually under-parallel (a 100 TB corpus scan already yields
     # tens of thousands of splits; the split count is known from footer
-    # metadata, no job runs). The same signal marks the corpus small enough
-    # to broadcast on the vector-attach joins below.
-    small_corpus = ids.rdd.getNumPartitions() < par
-    if small_corpus:
+    # metadata, no job runs).
+    if ids.rdd.getNumPartitions() < par:
         ids = ids.repartition(2 * par)
-    blocks = srp_band_blocks(ids, id_col, vec_col, bits, n_tables, dim, seed)
-    grouped = (
-        blocks.groupBy("block_key")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    # pair generation is quadratic per block while a grouped row is a few
-    # KB: AQE's byte-based coalescing would pack the blocks into 1-2
-    # post-shuffle partitions and serialize the explode. Spread the block
-    # rows round-robin (tiny shuffle; deterministic placement via Spark's
-    # sort-before-repartition) so the fan-out uses the whole cluster.
-    # Pairs come from posexplode + slice over the SORTED id array — each
-    # in-block pair once, already canonical (id_a < id_b), with no
-    # per-element lambda (the F.filter higher-order form paid an
-    # interpreted predicate per array element — measured 6-77 s of
-    # JIT-dependent CPU for ~16M element visits).
-    grouped = grouped.repartition(2 * par)
-    pairs = (
-        grouped.select(F.posexplode("ids").alias("_i", "vec_id_a"), "ids")
-        .select(
-            "vec_id_a",
-            F.explode(F.slice("ids", F.col("_i") + 2, F.size("ids"))
-                      ).alias("vec_id_b"),
-        )
-        .distinct()
-    )
-    # vector attach: project from the ORIGINAL df (not the repartitioned
-    # stream) so the planner sees the bare scan; on a small corpus force
-    # the build side to the vector table — the planner otherwise broadcast
-    # the PAIRS side (a driver-built multi-million-row hash relation,
-    # measured as BuildLeft on a 2M-row pair table). At 10^9 rows neither
-    # side fits a broadcast and the attach degrades to the shuffled
-    # pair-by-id joins the docstring describes.
-    va = df.select(F.col(id_col).alias("vec_id_a"),
-                   F.col(vec_col).alias("va"))
-    vb = df.select(F.col(id_col).alias("vec_id_b"),
-                   F.col(vec_col).alias("vb"))
-    if small_corpus:
-        va, vb = F.broadcast(va), F.broadcast(vb)
-    # asNondeterministic: the threshold filter references the UDF column;
-    # without it the optimizer pushes the filter below the projection and
-    # evaluates the UDF (and its Arrow transfer) TWICE (guide §4.4 —
-    # verified in the physical plan: two ArrowEvalPython nodes).
-    cos = _pair_cosine_udf().asNondeterministic()
+    blocks = srp_band_blocks(ids, id_col, vec_col, bits, n_tables, dim, seed,
+                             with_vec=True)
+    # the grouping needs no spreading repartition: the band stream carries
+    # the vectors, so AQE's coalescing (parallelism-first, 1 MB floor)
+    # keeps defaultParallelism post-shuffle partitions for any corpus big
+    # enough for the quadratic Gram work to matter.
+    id_type = df.schema[id_col].dataType
+    schema = T.StructType([T.StructField("vec_id_a", id_type),
+                           T.StructField("vec_id_b", id_type),
+                           T.StructField("raw", T.DoubleType())])
+    scored = blocks.groupBy("block_key").applyInPandas(
+        _bucket_pairs(threshold - 1e-4, id_col, vec_col), schema)
     return (
-        pairs.join(va, "vec_id_a").join(vb, "vec_id_b")
-        .withColumn("cosine", F.round(cos(F.col("va"), F.col("vb")), 4))
+        scored.select("vec_id_a", "vec_id_b",
+                      F.round("raw", 4).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
-        .select("vec_id_a", "vec_id_b", "cosine")
+        .distinct()
     )
 
 

@@ -75,7 +75,7 @@ def candidate_pairs(grouped: DataFrame, keep_block_key: bool = True,
     # round-5 form used F.filter(ids, lambda) higher-order predicates,
     # which evaluate an interpreted lambda PER ARRAY ELEMENT — at sum
     # m^2 ~ millions of element visits per run that was the candidates
-    # stage's JIT-sensitive hot spot (same fix as ann.lsh_cosine_pairs).
+    # stage's JIT-sensitive hot spot.
     # ids are unique within a block (one band row per id per band), so
     # ascending order makes every emission canonical id_a < id_b — the
     # same pair set as the filter form, row for row.

@@ -109,20 +109,90 @@ class TestANN:
         assert b1.equals(b2)
 
     def test_lsh_pairs_match_bruteforce(self, spark, emb):
-        """The bucketed scale path recovers the EXACT brute-force pair set
-        at its amplification settings (the lsh_emb_dups oracle contract)."""
-        got = {(r.vec_id_a, r.vec_id_b)
-               for r in ann.lsh_cosine_pairs(emb, threshold=0.35).collect()}
+        """The bucketed scale path recovers the EXACT brute-force
+        (a, b, cosine) triples at its amplification settings (the
+        lsh_emb_dups oracle contract): same pairs, same rounded values."""
+        got = {(r.vec_id_a, r.vec_id_b, r.cosine) for r in
+               ann.lsh_cosine_pairs(emb, threshold=0.35).collect()}
         local = emb.toPandas()
-        mat = np.array([np.asarray(v, dtype=np.float64)
-                        for v in local["embedding"]])
-        ids = local["vec_id"].to_numpy()
-        norms = np.linalg.norm(mat, axis=1)
-        cos = (mat @ mat.T) / np.outer(norms, norms)
-        ia, ib = np.where(np.round(cos, 4) >= 0.35)
-        expect = {(int(min(ids[a], ids[b])), int(max(ids[a], ids[b])))
-                  for a, b in zip(ia, ib) if ids[a] != ids[b]}
+        expect = _fold_cosine_pairs(local["vec_id"], local["embedding"], 0.35)
         assert got == expect
+
+    def test_lsh_pairs_hot_bucket_spans_tiles(self, spark):
+        """A planted family larger than one Gram tile shares a bucket in
+        every table: tiled scoring of that bucket still yields exactly the
+        brute-force triples."""
+        rng = np.random.RandomState(7)
+        n_family = ann.GRAM_TILE + 44
+        base = rng.standard_normal(64)
+        family = base + 1e-3 * rng.standard_normal((n_family, 64))
+        others = rng.standard_normal((40, 64))
+        vecs = np.vstack([family, others]).astype(np.float32)
+        ids = rng.permutation(10 * len(vecs))[:len(vecs)]
+        df = spark.createDataFrame(
+            [(int(i), [float(x) for x in v]) for i, v in zip(ids, vecs)],
+            "vec_id long, embedding array<float>")
+        kw = dict(bits=4, n_tables=4)
+        bucket_max = (ann.srp_band_blocks(df, **kw).groupBy("block_key")
+                      .count().agg(F.max("count")).first()[0])
+        assert bucket_max > ann.GRAM_TILE  # really more than one tile
+        got = {(r.vec_id_a, r.vec_id_b, r.cosine) for r in
+               ann.lsh_cosine_pairs(df, threshold=0.9, **kw).collect()}
+        expect = _fold_cosine_pairs(ids, vecs, 0.9)
+        assert len(expect) >= n_family * (n_family - 1) // 2
+        assert got == expect
+
+    def test_lsh_pairs_skip_null_and_zero_vectors(self, spark):
+        """Zero vectors share bucket 0 in every table and their cosine is
+        0/0 = NaN; null embeddings get no bucket. Neither may ever yield a
+        pair (Spark orders NaN above every number, so a NaN that reached
+        the threshold filter would pass it)."""
+        rng = np.random.RandomState(3)
+        vecs = rng.standard_normal((20, 64)).astype(np.float32)
+        vecs[1] = vecs[0] + np.float32(0.01)  # one real near-dup pair
+        zero, null = [100, 101, 102], [200, 201]
+        rows = ([(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+                + [(i, [0.0] * 64) for i in zero] + [(i, None) for i in null])
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        zero_keys = (ann.srp_band_blocks(df, n_tables=64)
+                     .filter(F.col("vec_id").isin(zero))
+                     .groupBy("block_key").count().collect())
+        assert len(zero_keys) == 64 and all(r["count"] == 3
+                                            for r in zero_keys)
+        got = {(r.vec_id_a, r.vec_id_b, r.cosine) for r in
+               ann.lsh_cosine_pairs(df, threshold=0.35).collect()}
+        assert not {i for a, b, _ in got for i in (a, b)} & set(zero + null)
+        assert got == _fold_cosine_pairs(range(len(vecs)), vecs, 0.35)
+        assert (0, 1) in {(a, b) for a, b, _ in got}
+
+
+def _fold_cosine_pairs(ids, vecs, threshold):
+    """Brute-force reference triples (id_a < id_b, cosine): float elements
+    widened to double, dot and squared norms as a left fold over dims,
+    dot / (sqrt * sqrt), then Spark's round — HALF_UP at 4 dp on the
+    double's decimal form."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    ids = np.asarray(ids)
+    mat = np.vstack([np.asarray(v, dtype=np.float32) for v in vecs]
+                    ).astype(np.float64)
+    ia, ib = np.triu_indices(len(mat), 1)
+    A, B = mat[ia], mat[ib]
+    dot, na, nb = np.zeros(len(ia)), np.zeros(len(ia)), np.zeros(len(ia))
+    for d in range(mat.shape[1]):
+        dot += A[:, d] * B[:, d]
+        na += A[:, d] * A[:, d]
+        nb += B[:, d] * B[:, d]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = dot / (np.sqrt(na) * np.sqrt(nb))
+    near = cos >= threshold - 1e-3  # NaN (zero vectors) is never near
+    out = set()
+    for a, b, c in zip(ids[ia][near], ids[ib][near], cos[near]):
+        r = float(Decimal(repr(float(c))).quantize(Decimal("0.0001"),
+                                                    ROUND_HALF_UP))
+        if r >= threshold:
+            out.add((int(min(a, b)), int(max(a, b)), r))
+    return out
 
 
 class TestMultimodal:
