@@ -29,9 +29,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-SRP_BITS = 16  # 2^16 buckets; tune to corpus size / recall target
-
-
 def _dot(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -119,19 +116,6 @@ def _srp_buckets_udf(planes, bits: int):
     return srp
 
 
-def srp_bucket(df: DataFrame, vec_col: str = "embedding",
-               bits: int = SRP_BITS, dim: int = 64, seed: int = 42) -> DataFrame:
-    """Signed-random-projection bucket id per row (one table).
-
-    Hyperplanes are a deterministic seeded matrix; bucketing is the
-    batched matmul UDF (_srp_buckets_udf)."""
-    import numpy as np
-
-    planes = np.random.RandomState(seed).standard_normal((bits, dim))
-    udf = _srp_buckets_udf(planes, bits)
-    return df.withColumn("bucket", udf(F.col(vec_col))[0])
-
-
 def srp_band_blocks(df: DataFrame, id_col: str = "vec_id",
                     vec_col: str = "embedding", bits: int = 4,
                     n_tables: int = 8, dim: int = 64, seed: int = 42,
@@ -146,11 +130,11 @@ def srp_band_blocks(df: DataFrame, id_col: str = "vec_id",
     the stream lsh_cosine_pairs scores bucket by bucket. Rows whose vector
     is null get no bucket and so no band row.
 
-    seed_per_table=True draws table t's hyperplanes from RandomState(seed+t)
-    (first `bits` rows) — the exact plane family of the per-table
-    srp_bucket(seed=seed+t) loop, so callers migrating from per-table plans
-    keep identical bucket assignments. Default False keeps the one-stream
-    family used by lsh_cosine_pairs (its equality oracle pins it)."""
+    seed_per_table=True draws table t's hyperplanes from its own
+    RandomState(seed+t) (first `bits` rows) — the plane family
+    lsh_cosine_topk uses. Default False draws all tables from one
+    RandomState(seed) stream, the family used by lsh_cosine_pairs (its
+    equality oracle pins it)."""
     import numpy as np
 
     if seed_per_table:
@@ -481,12 +465,10 @@ def lsh_cosine_topk(corpus: DataFrame, probes: DataFrame, k: int = 10,
     """Bucketed ANN with multi-table OR-amplification: a pair is a
     candidate if it collides in ANY of `n_tables` independent SRP tables
     (candidate prob = 1-(1-(1-theta/pi)^bits)^n_tables). All tables come
-    from ONE srp_band_blocks pass per side — one corpus scan + one explode
-    (round-2 looped srp_bucket per table: n_tables separate corpus scans
-    + unionAll). seed_per_table=True keeps the per-table plane family, so
-    candidate sets — and the output rows — are identical to the loop form.
-    Candidates are distinct'd, vectors attached once, scored once, window
-    top-k.
+    from ONE srp_band_blocks pass per side — one corpus scan + one explode,
+    not n_tables separate corpus scans + unionAll; both sides use the
+    seed_per_table plane family. Candidates are distinct'd, vectors
+    attached once, scored once, window top-k.
 
     Recall/cost dial: more bits -> smaller buckets (cheaper, lower recall);
     more tables -> higher recall (linear cost in banding columns, not in

@@ -69,12 +69,9 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     (by the node type's ordering — longs for the pipeline's surrogate ids).
 
     Only nodes that appear in an edge are returned (singletons are added by
-    the caller if desired). Pass `stats` to receive {"levels": k,
-    "mappings": m, "driver_finish": bool} plus — only when
-    driver_finish_edges > 0, whose entry check is the one place the edge
-    count is already paid for — "input_edges" (the key is deliberately
-    absent in pure-distributed mode rather than costing every run an
-    extra count job). `levels` counts DISTRIBUTED
+    the caller if desired). Pass `stats` to receive {"input_edges": n,
+    "levels": k, "mappings": m, "driver_finish": bool}; n is observed on
+    the edge materialization, so it costs no job. `levels` counts DISTRIBUTED
     contraction levels only (the scale-rehearsal metric: levels grow
     O(log diameter), so a jump flags a structural change in the match
     graph, not just more data — comparable between driver_finish on/off
@@ -83,8 +80,8 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
 
     Tail handling: level 0 collapses near-clique dedup components, so the
     level-1 contracted graph is typically orders of magnitude smaller than
-    the input. Once the contracted edge count (known for free — the level
-    output is materialized for the convergence check) drops below
+    the input. Once the current edge count (known for free — the input
+    and every level output are materialized anyway) is at most
     `driver_finish_edges`, the remaining levels run as ONE driver-side
     union-find over ~16-byte edge rows instead of 2-3 more rounds of
     cluster-wide joins whose serial latency dominates their work. Same
@@ -95,43 +92,42 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     """
     sc = edges.sparkSession.sparkContext
     # materialize the edge list once: its lineage may carry the whole
-    # scoring UDF chain, and each level consumes it three times
+    # scoring UDF chain, and each level consumes it three times. The edge
+    # count is observed on that materialization (no extra job), so every
+    # pass of the loop below knows its current edge count.
     sc.setJobDescription("cc:edges")
+    obs_n = Observation("cc_edges")
     cur = (
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
+        .observe(obs_n, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
+    n_cur = int(obs_n.get["n"])
+    if stats is not None:
+        stats["input_edges"] = n_cur
     mappings: list[DataFrame] = []
     used_driver_finish = False
-    # entry short-circuit, same bound as the mid-loop tail: a graph that
-    # ALREADY fits the driver-finish budget gains nothing from a
-    # distributed level — each level is ~8 driver-synchronized jobs whose
-    # barrier latency dwarfs the work on a sub-100k-edge graph (the
-    # embedding-cluster and small-corpus paths). The count reads the
-    # just-materialized checkpoint (cheap); at pipeline scale the count
-    # exceeds the bound and the loop proceeds unchanged.
-    if driver_finish_edges > 0:
-        n_edges = cur.count()
-        if stats is not None:
-            stats["input_edges"] = n_edges
-        if 0 < n_edges <= driver_finish_edges:
+    while n_cur > 0:
+        if n_cur <= driver_finish_edges:
+            # exact tail: union-find over the (contracted) edge graph. At
+            # entry this is the whole graph — a graph that already fits
+            # the budget gains nothing from a distributed level, each ~8
+            # driver-synchronized jobs whose barrier latency dwarfs the
+            # work on a sub-100k-edge graph.
             from ..functions.ccore import connected_components as uf_cc
 
             sc.setJobDescription("cc:driver_finish")
             uf = uf_cc([(r["src"], r["dst"]) for r in cur.collect()])
-            fin = edges.sparkSession.createDataFrame(
-                list(uf.items()),
-                schema=cur.select(
+            mappings.append(edges.sparkSession.createDataFrame(
+                list(uf.items()), schema=cur.select(
                     F.col("src").alias("node"),
-                    F.col("dst").alias("label")).schema)
-            sc.setJobDescription(None)
-            if stats is not None:
-                stats["driver_finish"] = True
-                stats["levels"] = 0
-                stats["mappings"] = 1
-            return fin.select("node", F.col("label").alias("cluster_id"))
-    for level in range(max_iter):
+                    F.col("dst").alias("label")).schema))
+            used_driver_finish = True
+            break
+        level = len(mappings)
+        if level == max_iter:
+            break
         sc.setJobDescription(f"cc:level{level}")
         sym = cur.select(
             F.col("src").alias("node"), F.col("dst").alias("nbr")
@@ -196,22 +192,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
             .observe(obs_n, F.count(F.lit(1)).alias("n"))
             .localCheckpoint()
         )
-        n_next = int(obs_n.get["n"])
-        if n_next == 0:
-            break
-        if n_next <= driver_finish_edges and driver_finish_edges > 0:
-            # exact tail: union-find over the contracted label graph
-            from ..functions.ccore import connected_components as uf_cc
-
-            sc.setJobDescription("cc:driver_finish")
-            uf = uf_cc([(r["src"], r["dst"]) for r in nxt.collect()])
-            fin = edges.sparkSession.createDataFrame(
-                list(uf.items()), schema=lab.select(
-                    "node", "label").schema)
-            mappings.append(fin.localCheckpoint())
-            used_driver_finish = True
-            break
-        cur = nxt
+        cur, n_cur = nxt, int(obs_n.get["n"])
     if stats is not None:
         stats["driver_finish"] = used_driver_finish
         # distributed contraction levels only — the driver-finish tail is
@@ -223,7 +204,9 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     # absent from the coarser map (their component already terminal) pass
     # through via the left join + coalesce.
     sc.setJobDescription("cc:compose")
-    final = mappings[-1]
+    # no edges, no mapping: the empty edge set already has the label shape
+    final = mappings[-1] if mappings else cur.select(
+        F.col("src").alias("node"), F.col("dst").alias("label"))
     for lab in reversed(mappings[:-1]):
         coarse = final.select(F.col("node").alias("label"),
                               F.col("label").alias("_l2"))

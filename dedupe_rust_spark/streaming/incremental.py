@@ -44,27 +44,38 @@ The match join reads state STRICTLY OLDER than the current batch
 partial state, or min(url) could resolve inside the batch and the retry
 would emit different matches than a clean first run.
 
-State layout:
-  state_dir/batches/batch_id=N/sha_prefix=H/   fresh per-batch state
-  state_dir/compacted/upto=K/sha_prefix=H/     folded batches 0..K
+State layout (two layered tables, one reader and one compactor):
+  state_dir/batches/batch_id=N/sha_prefix=H/         fresh per-batch state
+  state_dir/compacted/upto=K/sha_prefix=H/           folded batches 0..K
+  state_dir/bands/batch_id=N/bk_mod=M/               [fuzzy] band index
+  state_dir/bands_compacted/upto=K/bk_mod=M/         [fuzzy] folded index
 Every `compact_every` batches, process_batch folds all committed batch
 dirs (< current batch) plus the previous compacted snapshot into a new
 `upto=` snapshot and deletes what it folded — state reads stay O(state),
-not O(batches). Readers take ONLY the max `upto=` snapshot, so a crash
-between writing a new snapshot and deleting the old one never
-double-counts (and duplicates would be harmless anyway: the match join
-aggregates min(url) per sha). sha_prefix partitioning (16 shards) lets
-prefix-restricted reads prune to 1/16 of the files (asserted in
-tests/test_streaming.py).
+not O(batches). Listing and deletion go through Hadoop FileSystem, so
+the same code runs on local, HDFS and object-store state dirs. Readers
+take ONLY the max `upto=` snapshot, so a crash between writing a new
+snapshot and deleting the old one never double-counts (and duplicates
+would be harmless anyway: the match join aggregates min(url) per sha).
+sha_prefix partitioning (16 shards) lets prefix-restricted reads prune
+to 1/16 of the files (asserted in tests/test_streaming.py).
+
+Skip rule: the fuzzy tier runs only when some fresh url (text not yet in
+state byte-identically) has a band key in a stored index partition. A
+batch of exact copies, or one whose keys touch no index partition,
+compares nothing and reads no state bands — the cheap check before the
+expensive compare.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.blocking import lsh_blocks
 from ..operators.signatures import extract, signatures
 from ..schemas import PAGES
 from ..sources.pages import clean_pages
@@ -90,222 +101,137 @@ DEFAULT_COMPACT_EVERY = 8
 BAND_INDEX_PARTS = 64
 
 
-def posix_lister(path: str) -> list[str]:
-    """Default directory lister: driver-side os.listdir, correct on POSIX /
-    HDFS-like mounts (this sandbox, NFS, fuse). Returns child names, [] if
-    the directory does not exist."""
-    if not os.path.isdir(path):
-        return []
-    return os.listdir(path)
+class LayeredTable(NamedTuple):
+    """One layered parquet table under a state dir: per-batch layers
+    <batches>/batch_id=N/<part>=v/ plus folded snapshots
+    <compacted>/upto=K/<part>=v/. `key` is the compaction dedup key —
+    crash duplicates are identical on it."""
+    batches: str
+    compacted: str
+    part: str
+    key: list[str]
 
 
-def hadoop_lister(spark: SparkSession):
-    """Object-store lister: Hadoop FileSystem.listStatus via the session's
-    JVM — the swap-in for s3a/gs/abfs state dirs where os.listdir has no
-    meaning. Same contract as posix_lister (child names, [] if absent)."""
-    def _list(path: str) -> list[str]:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(conf)
-        if not fs.exists(p):
-            return []
-        return [st.getPath().getName() for st in fs.listStatus(p)]
-    return _list
+SIG_STATE = LayeredTable("batches", "compacted", "sha_prefix", SIG_STATE_COLS)
+BAND_INDEX = LayeredTable("bands", "bands_compacted", "bk_mod",
+                          ["block_key", "id"])
 
 
-def posix_remover(path: str) -> None:
-    """Default recursive directory remover (compaction cleanup). Pair of
-    posix_lister: shutil has no meaning on object stores."""
-    shutil.rmtree(path, ignore_errors=True)
+def _hadoop_path(spark: SparkSession, path: str):
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
-def hadoop_remover(spark: SparkSession):
-    """Object-store remover: Hadoop FileSystem.delete(recursive) — the
-    swap-in beside hadoop_lister; without it compaction on s3a/gs would
-    write snapshots but silently never delete the folded batch dirs
-    (shutil.rmtree no-ops there), so state reads would double-count and
-    the dir would grow without bound."""
-    def _rm(path: str) -> None:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(conf)
-        if fs.exists(p):
-            fs.delete(p, True)
-    return _rm
+def _ls(spark: SparkSession, path: str) -> list[str]:
+    """Child names of `path` ([] if absent) via Hadoop FileSystem — the
+    same call on local, HDFS and s3a/gs/abfs state dirs."""
+    fs, p = _hadoop_path(spark, path)
+    return [st.getPath().getName() for st in fs.listStatus(p)] \
+        if fs.exists(p) else []
 
 
-def _batch_ids(state_dir: str, lister=posix_lister,
-               subdir: str = "batches") -> list[int]:
-    return sorted(int(f.split("=", 1)[1])
-                  for f in lister(os.path.join(state_dir, subdir))
-                  if f.startswith("batch_id="))
+def _rm(spark: SparkSession, path: str) -> None:
+    fs, p = _hadoop_path(spark, path)
+    fs.delete(p, True)
 
 
-def _compacted_uptos(state_dir: str, lister=posix_lister,
-                     subdir: str = "compacted") -> list[int]:
-    return sorted(int(f.split("=", 1)[1])
-                  for f in lister(os.path.join(state_dir, subdir))
-                  if f.startswith("upto="))
+def _layer_ids(spark: SparkSession, path: str, name: str) -> list[int]:
+    """Sorted N of the `name=N` children of `path`; anything else
+    (_SUCCESS, _temporary, .crc sidecars) is ignored."""
+    return sorted(int(f.split("=", 1)[1]) for f in _ls(spark, path)
+                  if f.startswith(f"{name}="))
 
 
-def _state(spark: SparkSession, state_dir: str,
-           before_batch: int | None = None,
-           lister=posix_lister,
-           cols: list[str] = SIG_STATE_COLS) -> DataFrame | None:
-    """Accumulated signature state: newest compacted snapshot + batch dirs.
-    before_batch=N excludes state written by batch N or later — the
-    retry-safety contract (a snapshot only ever folds batches < any live
-    batch, so snapshots never need the filter). `cols` selects the stored
-    state schema (SIG_STATE_COLS for exact-only streams, FUZZY_STATE_COLS
-    for fuzzy ones — a state dir belongs to one mode, set at stream
-    start)."""
-    parts: list[DataFrame] = []
-    uptos = _compacted_uptos(state_dir, lister)
+def _read_layered(spark: SparkSession, state_dir: str, table: LayeredTable,
+                  before_batch: int | None = None,
+                  parts: list | None = None) -> DataFrame | None:
+    """The table's stored rows (partition column included): the newest
+    `upto=` snapshot plus the batch layers. before_batch=N excludes layers
+    written by batch N or later — the retry-safety contract (a snapshot
+    only ever folds batches < any live batch, so snapshots never need the
+    filter). `parts` prunes at the PATH level to those partition values
+    (None = all): only the touched leaf dirs are ever listed into the
+    scan. Layers without partition dirs (an empty batch) are skipped.
+    None if nothing is stored."""
+    def leaves(layer: str) -> list[str]:
+        names = [f for f in _ls(spark, layer)
+                 if f.startswith(f"{table.part}=")]
+        if parts is None:
+            # whole layers: a few paths, not one per partition, keep the
+            # scan's file listing on the driver
+            return [layer] if names else []
+        want = {f"{table.part}={v}" for v in parts}
+        return [os.path.join(layer, f) for f in names if f in want]
+
+    frames: list[DataFrame] = []
+    snaps = os.path.join(state_dir, table.compacted)
+    uptos = _layer_ids(spark, snaps, "upto")
     if uptos:
-        parts.append(
-            spark.read.parquet(
-                os.path.join(state_dir, "compacted", f"upto={uptos[-1]}")
-            ).select(*cols, "sha_prefix")
-        )
-    bids = [b for b in _batch_ids(state_dir, lister)
-            if before_batch is None or b < before_batch]
-    if bids:
-        bdir = os.path.join(state_dir, "batches")
-        parts.append(
-            spark.read.option("basePath", bdir).parquet(
-                *[os.path.join(bdir, f"batch_id={b}") for b in bids]
-            ).select(*cols, "sha_prefix")
-        )
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        base = os.path.join(snaps, f"upto={uptos[-1]}")
+        paths = leaves(base)
+        if paths:
+            frames.append(spark.read.option("basePath", base).parquet(*paths))
+    root = os.path.join(state_dir, table.batches)
+    paths = [p for b in _layer_ids(spark, root, "batch_id")
+             if before_batch is None or b < before_batch
+             for p in leaves(os.path.join(root, f"batch_id={b}"))]
+    if paths:
+        frames.append(spark.read.option("basePath", root).parquet(*paths)
+                      .drop("batch_id"))
+    return reduce(DataFrame.unionByName, frames) if frames else None
+
+
+def _compact(spark: SparkSession, state_dir: str, table: LayeredTable,
+             current_batch: int) -> None:
+    """Fold committed batch layers (< current_batch) + the previous
+    snapshot into <compacted>/upto=<current_batch-1>, then delete what was
+    folded. Idempotent: a retried fold overwrites the same upto dir;
+    readers use the MAX upto snapshot so stragglers are ignored until
+    removed."""
+    root = os.path.join(state_dir, table.batches)
+    bids = [b for b in _layer_ids(spark, root, "batch_id")
+            if b < current_batch]
+    folded = _read_layered(spark, state_dir, table,
+                           before_batch=current_batch) if bids else None
+    if folded is None:
+        return
+    # self-heal: if a previous fold crashed after writing its snapshot but
+    # before deleting the folded batch dirs, the next fold reads both.
+    # Crash duplicates are identical on the table's key (the same batch
+    # rows read twice); for the signature state the key is the complete
+    # state tuple, so a url legitimately re-crawled with different text
+    # keeps both (url, text_sha256) rows and future matches against
+    # either text stay correct.
+    upto = current_batch - 1
+    snaps = os.path.join(state_dir, table.compacted)
+    folded.dropDuplicates(table.key).write.partitionBy(table.part).mode(
+        "overwrite").parquet(os.path.join(snaps, f"upto={upto}"))
+    for b in bids:
+        _rm(spark, os.path.join(root, f"batch_id={b}"))
+    for u in _layer_ids(spark, snaps, "upto"):
+        if u != upto:
+            _rm(spark, os.path.join(snaps, f"upto={u}"))
 
 
 def _band_sig_index(sig: DataFrame) -> DataFrame:
-    """(bk_mod, block_key, id) band-index rows for a signature batch —
-    id = xxhash64(url), the batch pipeline's surrogate key discipline."""
-    return (
-        sig.select(F.xxhash64("url").alias("id"),
-                   F.posexplode("bands").alias("_b", "_h"))
-        .select(F.xxhash64("_b", "_h").alias("block_key"), "id")
+    """(block_key, id, bk_mod) band-index rows for a signature batch:
+    blocking.lsh_blocks' band keys with id = xxhash64(url), the batch
+    pipeline's surrogate key discipline."""
+    return lsh_blocks(sig.select(F.xxhash64("url").alias("id"), "bands")) \
         .withColumn("bk_mod", F.pmod("block_key", F.lit(BAND_INDEX_PARTS)))
-    )
 
 
-def _band_index(spark: SparkSession, state_dir: str,
-                before_batch: int | None = None,
-                lister=posix_lister,
-                mods: list[int] | None = None) -> DataFrame | None:
-    """Accumulated band index (block_key, id), pruned at the PATH level to
-    the bk_mod partitions in `mods` (None = all): only the touched 1/P of
-    the index files are ever listed into the scan — the O(state)-per-batch
-    band scan becomes O(state * touched/P). Same snapshot+batches layout
-    and retry contract as _state."""
-    def _mod_paths(base: str) -> list[str]:
-        subs = [f for f in lister(base) if f.startswith("bk_mod=")]
-        if mods is not None:
-            want = {f"bk_mod={m}" for m in mods}
-            subs = [f for f in subs if f in want]
-        return [os.path.join(base, f) for f in subs]
-
-    parts: list[DataFrame] = []
-    uptos = _compacted_uptos(state_dir, lister,
-                             subdir="bands_compacted")
-    if uptos:
-        base = os.path.join(state_dir, "bands_compacted", f"upto={uptos[-1]}")
-        paths = _mod_paths(base)
-        if paths:
-            parts.append(spark.read.option("basePath", base).parquet(*paths)
-                         .select("block_key", "id"))
-    bids = [b for b in _batch_ids(state_dir, lister, subdir="bands")
-            if before_batch is None or b < before_batch]
-    for b in bids:
-        base = os.path.join(state_dir, "bands", f"batch_id={b}")
-        paths = _mod_paths(base)
-        if paths:
-            parts.append(spark.read.option("basePath", base).parquet(*paths)
-                         .select("block_key", "id"))
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _compact_bands(spark: SparkSession, state_dir: str, current_batch: int,
-                   lister=posix_lister, remover=posix_remover) -> None:
-    """Fold committed band-index batch dirs + the previous snapshot into
-    bands_compacted/upto=<current_batch-1> — the index twin of _compact
-    (crash dups are full-row identical; harmless for candidates, deduped
-    for size)."""
-    bids = [b for b in _batch_ids(state_dir, lister, subdir="bands")
-            if b < current_batch]
-    if not bids:
-        return
-    folded = _band_index(spark, state_dir, before_batch=current_batch,
-                         lister=lister)
-    folded = (folded.dropDuplicates(["block_key", "id"])
-              .withColumn("bk_mod",
-                          F.pmod("block_key", F.lit(BAND_INDEX_PARTS))))
-    upto = current_batch - 1
-    target = os.path.join(state_dir, "bands_compacted", f"upto={upto}")
-    folded.write.partitionBy("bk_mod").mode("overwrite").parquet(target)
-    for b in bids:
-        remover(os.path.join(state_dir, "bands", f"batch_id={b}"))
-    for u in _compacted_uptos(state_dir, lister, subdir="bands_compacted"):
-        if u != upto:
-            remover(os.path.join(state_dir, "bands_compacted", f"upto={u}"))
-
-
-def _compact(spark: SparkSession, state_dir: str, current_batch: int,
-             lister=posix_lister, remover=posix_remover,
-             cols: list[str] = SIG_STATE_COLS) -> None:
-    """Fold committed batch dirs (< current_batch) + the previous snapshot
-    into compacted/upto=<current_batch-1>, then delete what was folded.
-    Idempotent: a retried fold overwrites the same upto dir; readers use
-    the MAX upto snapshot so stragglers are ignored until removed."""
-    bids = [b for b in _batch_ids(state_dir, lister) if b < current_batch]
-    if not bids:
-        return
-    folded = _state(spark, state_dir, before_batch=current_batch,
-                    lister=lister, cols=cols)
-    # self-heal: if a previous fold crashed after writing its snapshot but
-    # before deleting the folded batch dirs, the next fold reads both.
-    # Crash duplicates are FULL-ROW identical (the same batch rows read
-    # twice), so dedup on the complete state tuple: a url legitimately
-    # re-crawled with different text keeps both (url, text_sha256) rows
-    # and future matches against either text stay correct.
-    folded = folded.dropDuplicates(SIG_STATE_COLS)
-    upto = current_batch - 1
-    target = os.path.join(state_dir, "compacted", f"upto={upto}")
-    folded.write.partitionBy("sha_prefix").mode("overwrite").parquet(target)
-    for b in bids:
-        remover(os.path.join(state_dir, "batches", f"batch_id={b}"))
-    for u in _compacted_uptos(state_dir, lister):
-        if u != upto:
-            remover(os.path.join(state_dir, "compacted", f"upto={u}"))
-
-
-def _fuzzy_matches(sig: DataFrame, prev: DataFrame,
-                   lev_match: float, jaccard_match: float,
-                   idx: DataFrame | None = None) -> DataFrame:
+def _fuzzy_matches(sig: DataFrame, prev: DataFrame, idx: DataFrame,
+                   lev_match: float, jaccard_match: float) -> DataFrame:
     """Near-dup matches of the batch against pre-batch state:
     (url, matched_url, score) — the best-scoring state match per new url,
     deterministic (ties break to the lexicographically smallest url).
 
     Candidate generation mirrors the batch pipeline's banding: LSH
-    band-key equi-join, batch band stream broadcast so the state (index)
-    streams past it. When `idx` is given (the band-key-partitioned
-    (block_key, id) index, pruned to the batch's touched partitions by
-    the caller) the join carries 8-byte ids only and matched ids join
-    back to `prev` for urls; without it (index not yet built for a
-    pre-existing state dir) the bands are exploded from `prev` directly.
+    band-key equi-join (blocking.lsh_blocks' keys), batch band stream
+    broadcast so the state's band index `idx` (pruned to the batch's
+    touched partitions by the caller) streams past it. The join carries
+    8-byte ids only; matched ids join back to `prev` for urls.
     A url is NEVER a fuzzy match of itself: a re-crawled url whose text
     drifted is excluded here by the url != matched_url filter (its
     batch and state rows stay distinct via the n:/o: namespaces below)
@@ -320,34 +246,22 @@ def _fuzzy_matches(sig: DataFrame, prev: DataFrame,
     AQE (candidates are micro-batch-sized; session.py enables AQE)."""
     from ..operators import scoring
 
-    nb = sig.select("url", F.posexplode("bands").alias("_b", "_h")).select(
-        F.xxhash64("_b", "_h").alias("block_key"), "url")
-    if idx is not None:
-        hit_ids = (
-            idx.join(F.broadcast(nb), "block_key")
-            .select("url", "id")
-            .distinct()
-        )
-        cand = (
-            hit_ids.join(prev.select(F.xxhash64("url").alias("id"),
-                                     F.col("url").alias("matched_url")),
-                         "id")
-            .filter(F.col("url") != F.col("matched_url"))
-            .select(F.concat(F.lit("n:"), "url").alias("id_a"),
-                    F.concat(F.lit("o:"), "matched_url").alias("id_b"))
-            .distinct()
-        )
-    else:
-        ob = prev.select(F.col("url").alias("matched_url"),
-                         F.posexplode("bands").alias("_b", "_h")).select(
-            F.xxhash64("_b", "_h").alias("block_key"), "matched_url")
-        cand = (
-            ob.join(F.broadcast(nb), "block_key")
-            .filter(F.col("url") != F.col("matched_url"))
-            .select(F.concat(F.lit("n:"), "url").alias("id_a"),
-                    F.concat(F.lit("o:"), "matched_url").alias("id_b"))
-            .distinct()
-        )
+    nb = lsh_blocks(sig.select(F.col("url").alias("id"), "bands")) \
+        .withColumnRenamed("id", "url")
+    hit_ids = (
+        idx.join(F.broadcast(nb), "block_key")
+        .select("url", "id")
+        .distinct()
+    )
+    cand = (
+        hit_ids.join(prev.select(F.xxhash64("url").alias("id"),
+                                 F.col("url").alias("matched_url")),
+                     "id")
+        .filter(F.col("url") != F.col("matched_url"))
+        .select(F.concat(F.lit("n:"), "url").alias("id_a"),
+                F.concat(F.lit("o:"), "matched_url").alias("id_b"))
+        .distinct()
+    )
     sig_u = (
         sig.select(F.concat(F.lit("n:"), "url").alias("id"),
                    "minhash", "text")
@@ -380,7 +294,6 @@ def start_incremental_dedup(spark: SparkSession, input_dir: str,
                             state_dir: str, matches_dir: str,
                             checkpoint_dir: str, available_now: bool = True,
                             compact_every: int = DEFAULT_COMPACT_EVERY,
-                            lister=posix_lister, remover=posix_remover,
                             fuzzy: bool = False,
                             lev_match: float | None = None,
                             jaccard_match: float | None = None):
@@ -415,8 +328,8 @@ def start_incremental_dedup(spark: SparkSession, input_dir: str,
         )
         # pre-batch state only: batch_id < N excludes a failed attempt's
         # own partial writes, so retry output == first-run output
-        prev = _state(spark, state_dir, before_batch=batch_id, lister=lister,
-                      cols=state_cols)
+        prev = _read_layered(spark, state_dir, SIG_STATE,
+                             before_batch=batch_id)
         if prev is not None:
             seen = prev.groupBy("sha_prefix", "text_sha256").agg(
                 F.min("url").alias("first_url")
@@ -440,16 +353,21 @@ def start_incremental_dedup(spark: SparkSession, input_dir: str,
                 # state read below lists ONLY those bk_mod dirs
                 mods = [r[0] for r in _band_sig_index(fresh)
                         .select("bk_mod").distinct().collect()]
-                idx = _band_index(spark, state_dir, before_batch=batch_id,
-                                  lister=lister, mods=mods)
-                fz = _fuzzy_matches(fresh, prev, lev, jacc, idx=idx)
+                idx = _read_layered(spark, state_dir, BAND_INDEX,
+                                    before_batch=batch_id, parts=mods)
                 matches = exact.select(
                     "url", F.col("first_url").alias("matched_url"),
                     F.lit("exact").alias("kind"),
                     F.lit(1.0).alias("score"),
-                ).unionByName(fz.select(
-                    "url", "matched_url", F.lit("fuzzy").alias("kind"),
-                    F.col("score").cast("double")))
+                )
+                # no fresh url, or no fresh band key in a stored index
+                # partition: nothing can collide, so the fuzzy tier is
+                # skipped and no state bands are read
+                if idx is not None:
+                    fz = _fuzzy_matches(fresh, prev, idx, lev, jacc)
+                    matches = matches.unionByName(fz.select(
+                        "url", "matched_url", F.lit("fuzzy").alias("kind"),
+                        F.col("score").cast("double")))
             else:
                 matches = exact
         elif fuzzy:
@@ -463,20 +381,15 @@ def start_incremental_dedup(spark: SparkSession, input_dir: str,
         # idempotent per-batch sinks: overwrite THIS batch's partition dir
         matches.write.mode("overwrite").parquet(
             os.path.join(matches_dir, f"batch_id={batch_id}"))
-        sig.write.partitionBy("sha_prefix").mode("overwrite").parquet(
-            os.path.join(state_dir, "batches", f"batch_id={batch_id}"))
+        layers = [(SIG_STATE, sig)]
         if fuzzy:
-            # band-key-partitioned index twin of the batch state write
-            # (same batch_id dir + overwrite idempotency contract)
-            _band_sig_index(sig).write.partitionBy("bk_mod").mode(
-                "overwrite").parquet(
-                os.path.join(state_dir, "bands", f"batch_id={batch_id}"))
+            layers.append((BAND_INDEX, _band_sig_index(sig)))
+        for table, rows in layers:
+            rows.write.partitionBy(table.part).mode("overwrite").parquet(
+                os.path.join(state_dir, table.batches, f"batch_id={batch_id}"))
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            _compact(spark, state_dir, current_batch=batch_id, lister=lister,
-                     remover=remover, cols=state_cols)
-            if fuzzy:
-                _compact_bands(spark, state_dir, current_batch=batch_id,
-                               lister=lister, remover=remover)
+            for table, _ in layers:
+                _compact(spark, state_dir, table, current_batch=batch_id)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -10,9 +10,9 @@ import pyarrow.parquet as pq
 
 from dedupe_rust_spark.datagen import _PA_PAGES, EPOCH
 from dedupe_rust_spark.functions.textcore import render_html
+from dedupe_rust_spark.streaming import incremental
 from dedupe_rust_spark.streaming.incremental import (
-    _batch_ids, _compacted_uptos, _state, posix_lister,
-    start_incremental_dedup,
+    SIG_STATE, _layer_ids, _read_layered, start_incremental_dedup,
 )
 
 
@@ -58,7 +58,7 @@ def test_incremental_dedup_two_waves(spark, tmp_path):
     assert matches.iloc[0]["url"] == "https://h2.example.com/a-copy.html"
     assert matches.iloc[0]["first_url"] == "https://h1.example.com/a.html"
 
-    state = _state(spark, state_dir)
+    state = _read_layered(spark, state_dir, SIG_STATE)
     assert state.count() == 4  # all four pages signed into state
 
     # state is sharded by sha_prefix: a prefix-restricted read must prune
@@ -78,7 +78,7 @@ def test_incremental_dedup_two_waves(spark, tmp_path):
                                  ckpt)
     q3.awaitTermination(120)
     assert len(spark.read.parquet(matches_dir).toPandas()) == 1
-    assert _state(spark, state_dir).count() == 4
+    assert _read_layered(spark, state_dir, SIG_STATE).count() == 4
 
 
 def test_incremental_retry_reproduces_first_run(spark, tmp_path):
@@ -127,7 +127,7 @@ def test_incremental_retry_reproduces_first_run(spark, tmp_path):
     m2 = {(r.url, r.first_url) for r in
           spark.read.parquet(matches_dir).toPandas().itertuples()}
     assert m2 == expect  # neither dropped nor duplicated
-    assert _state(spark, state_dir).count() == 2
+    assert _read_layered(spark, state_dir, SIG_STATE).count() == 2
 
 
 def test_incremental_state_compaction(spark, tmp_path):
@@ -162,7 +162,7 @@ def test_incremental_state_compaction(spark, tmp_path):
     # folded layout: one upto= snapshot, only batch 2 left as a batch dir
     assert os.listdir(os.path.join(state_dir, "compacted")) == ["upto=1"]
     assert os.listdir(os.path.join(state_dir, "batches")) == ["batch_id=2"]
-    state = _state(spark, state_dir)
+    state = _read_layered(spark, state_dir, SIG_STATE)
     assert state.count() == 5  # nothing lost in the fold
     # the state read actually comes (partly) from the compacted snapshot
     files = [r[0] for r in
@@ -181,61 +181,25 @@ def test_incremental_state_compaction(spark, tmp_path):
     assert ("https://h2.example.com/a-copy.html",
             "https://h1.example.com/a.html") in got
     assert len(got) == 3
-    assert _state(spark, state_dir).count() == 6
+    assert _read_layered(spark, state_dir, SIG_STATE).count() == 6
 
 
-def test_state_listing_is_pluggable_mock_store(spark, tmp_path):
-    """The compaction contract must hold against a non-POSIX listing
-    backend (object stores have no os.listdir): drive the whole two-wave +
-    compaction flow through a recording mock lister and assert (a) every
-    directory listing went through it, (b) results are identical to the
-    POSIX run. Plus pure-dict coverage: the id parsers consume ONLY what
-    the lister returns, junk entries ignored."""
-    calls: list[str] = []
+def test_state_id_parser_ignores_junk_entries(spark, tmp_path):
+    """The layer-id parser reads a real state dir through Hadoop
+    FileSystem and keeps only `batch_id=N` / `upto=K` entries: temp
+    dirs, markers and checksum sidecars are skipped. Layers holding no
+    partition dirs contribute nothing to a read."""
+    state_dir = tmp_path / "state"
+    for d in ("batches/batch_id=3", "batches/batch_id=0", "batches/_tmp",
+              "compacted/upto=7", "compacted/junk"):
+        (state_dir / d).mkdir(parents=True)
+    for f in ("batches/_SUCCESS", "batches/.crc", "compacted/_SUCCESS"):
+        (state_dir / f).write_bytes(b"")
 
-    def mock_lister(path: str) -> list[str]:
-        calls.append(path)
-        return posix_lister(path)  # same data; the INDIRECTION is the test
-
-    input_dir = str(tmp_path / "in")
-    state_dir = str(tmp_path / "state")
-    matches_dir = str(tmp_path / "matches")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(input_dir)
-
-    doc_a = render_html("Title A", ["mock store body alpha " * 5])
-    doc_b = render_html("Title B", ["mock store body beta " * 5])
-
-    def run_wave(name, rows):
-        _write_wave(os.path.join(input_dir, name), rows)
-        q = start_incremental_dedup(spark, input_dir, state_dir,
-                                    matches_dir, ckpt, compact_every=2,
-                                    lister=mock_lister)
-        q.awaitTermination(120)
-
-    run_wave("w1.parquet", [("https://h1.example.com/a.html", doc_a),
-                            ("https://h1.example.com/b.html", doc_b)])
-    run_wave("w2.parquet", [("https://h2.example.com/a-copy.html", doc_a)])
-    run_wave("w3.parquet", [("https://h3.example.com/b-copy.html", doc_b)])
-
-    # every state listing went through the mock (batches + compacted dirs)
-    assert any(p.endswith("batches") for p in calls)
-    assert any(p.endswith("compacted") for p in calls)
-    # batch 2 compacted batches 0..1; matches identical to the POSIX flow
-    assert os.listdir(os.path.join(state_dir, "compacted")) == ["upto=1"]
-    got = {(r.url, r.first_url) for r in
-           spark.read.parquet(matches_dir).toPandas().itertuples()}
-    assert got == {("https://h2.example.com/a-copy.html",
-                    "https://h1.example.com/a.html"),
-                   ("https://h3.example.com/b-copy.html",
-                    "https://h1.example.com/b.html")}
-    assert _state(spark, state_dir, lister=mock_lister).count() == 4
-
-    # pure-dict lister: parsers read only the lister's output, skip junk
-    fake = {"/s/batches": ["batch_id=3", "batch_id=0", "_tmp", ".crc"],
-            "/s/compacted": ["upto=7", "junk"]}
-    assert _batch_ids("/s", lister=lambda p: fake.get(p, [])) == [0, 3]
-    assert _compacted_uptos("/s", lister=lambda p: fake.get(p, [])) == [7]
+    assert _layer_ids(spark, str(state_dir / "batches"), "batch_id") == [0, 3]
+    assert _layer_ids(spark, str(state_dir / "compacted"), "upto") == [7]
+    assert _layer_ids(spark, str(state_dir / "missing"), "upto") == []
+    assert _read_layered(spark, str(state_dir), SIG_STATE) is None
 
 
 def test_incremental_fuzzy_dedup(spark, tmp_path):
@@ -244,8 +208,6 @@ def test_incremental_fuzzy_dedup(spark, tmp_path):
     batch pipeline's threshold; an exact copy stays kind='exact' (score
     1.0, sha semantics); an unrelated page matches nothing. State carries
     the fuzzy columns and compaction folds them intact."""
-    from dedupe_rust_spark.streaming.incremental import FUZZY_STATE_COLS
-
     input_dir = str(tmp_path / "in")
     state_dir = str(tmp_path / "state")
     matches_dir = str(tmp_path / "matches")
@@ -291,7 +253,7 @@ def test_incremental_fuzzy_dedup(spark, tmp_path):
 
     # state carries the fuzzy columns; wave 3 (after the compaction
     # triggered by batch 2) still fuzzy-matches against folded state
-    state = _state(spark, state_dir, cols=FUZZY_STATE_COLS)
+    state = _read_layered(spark, state_dir, SIG_STATE)
     assert state.count() == 4
     assert {"bands", "minhash", "text"} <= set(state.columns)
 
@@ -348,9 +310,9 @@ def test_fuzzy_band_index_partition_pruning(spark, tmp_path):
     touched partitions must list ONLY files under those bk_mod dirs
     (path-level pruning — the 10^12 design's per-batch O(touched/P)
     state scan), and the index rows must be (block_key, id) surrogate
-    longs, never url/text payloads."""
+    longs plus their bk_mod partition value, never url/text payloads."""
     from dedupe_rust_spark.streaming.incremental import (
-        BAND_INDEX_PARTS, _band_index, _band_sig_index,
+        BAND_INDEX, BAND_INDEX_PARTS,
     )
 
     input_dir = str(tmp_path / "in")
@@ -373,10 +335,11 @@ def test_fuzzy_band_index_partition_pruning(spark, tmp_path):
     run_wave("w2.parquet", docs[3:])
 
     # index rows are surrogate longs only
-    full = _band_index(spark, state_dir)
+    full = _read_layered(spark, state_dir, BAND_INDEX)
     assert full is not None
-    assert set(full.columns) == {"block_key", "id"}
-    assert dict(full.dtypes) == {"block_key": "bigint", "id": "bigint"}
+    assert set(full.columns) == {"block_key", "id", "bk_mod"}
+    assert dict(full.dtypes) == {"block_key": "bigint", "id": "bigint",
+                                 "bk_mod": "int"}
 
     # pick a strict subset of the mods actually present on disk
     present = sorted({int(p.split("=")[1]) for b in
@@ -386,7 +349,7 @@ def test_fuzzy_band_index_partition_pruning(spark, tmp_path):
                       if p.startswith("bk_mod=")})
     assert present, "fuzzy stream must write the band index"
     touched = present[: max(1, len(present) // 2)]
-    pruned = _band_index(spark, state_dir, mods=touched)
+    pruned = _read_layered(spark, state_dir, BAND_INDEX, parts=touched)
     files = pruned.inputFiles()
     assert files, "pruned index read must still see the touched dirs"
     want = {f"bk_mod={m}" for m in touched}
@@ -400,3 +363,52 @@ def test_fuzzy_band_index_partition_pruning(spark, tmp_path):
         "_m", F.pmod("block_key", F.lit(BAND_INDEX_PARTS))
     ).filter(F.col("_m").isin(touched)).count()
     assert got == want_rows
+
+
+def test_fuzzy_exact_copy_wave_skips_fuzzy_tier(spark, tmp_path, monkeypatch):
+    """A fuzzy wave made only of exact copies of earlier pages has no
+    fresh url, so it must settle on the sha join alone: the fuzzy tier
+    (and its state band scan) never runs, and the exact matches are the
+    plain copy -> original pairs. A later wave with a near-dup does enter
+    the fuzzy tier, which proves the spy sees process_batch's calls
+    (foreachBatch runs on the driver)."""
+    calls: list[int] = []
+    real = incremental._fuzzy_matches
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(incremental, "_fuzzy_matches", spy)
+
+    input_dir = str(tmp_path / "in")
+    state_dir = str(tmp_path / "state")
+    matches_dir = str(tmp_path / "matches")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(input_dir)
+
+    bodies = [f"skip wave page {i} body words " * 10 for i in range(3)]
+    docs = [render_html(f"Doc {i}", [body]) for i, body in enumerate(bodies)]
+
+    def run_wave(name, rows):
+        _write_wave(os.path.join(input_dir, name), rows)
+        q = start_incremental_dedup(spark, input_dir, state_dir,
+                                    matches_dir, ckpt, fuzzy=True)
+        q.awaitTermination(120)
+
+    run_wave("w1.parquet", [(f"https://a.example.com/{i}.html", d)
+                            for i, d in enumerate(docs)])
+    run_wave("w2.parquet", [(f"https://b.example.com/{i}.html", d)
+                            for i, d in enumerate(docs)])
+
+    m = spark.read.parquet(matches_dir).toPandas()
+    assert {(r.url, r.matched_url, r.kind, r.score) for r in m.itertuples()} \
+        == {(f"https://b.example.com/{i}.html",
+             f"https://a.example.com/{i}.html", "exact", 1.0)
+            for i in range(3)}
+    assert calls == []
+
+    near = bodies[0].replace("body", "edited", 1)
+    run_wave("w3.parquet", [("https://c.example.com/near.html",
+                             render_html("Doc 0", [near]))])
+    assert calls == [1]
